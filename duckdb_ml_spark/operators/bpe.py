@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark import memo
 from duckdb_ml_spark.operators.textnorm import tokens
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
@@ -171,17 +172,14 @@ def bpe_token_counts(
     )
 
 
-_MERGE_CACHE: dict = {}
-
-
 def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
     """Merge table of sf_dir's documents corpus — a dataset property, memoized
-    like embedding_dim / collect_matrix."""
-    merges = _MERGE_CACHE.get(sf_dir)
-    if merges is None:
-        merges = train_bpe_merges(load(spark, sf_dir, "documents"))
-        _MERGE_CACHE[sf_dir] = merges
-    return merges
+    in the artifact store."""
+    return memo.get(
+        spark,
+        (sf_dir, "documents", "bpe_merges"),
+        lambda: train_bpe_merges(load(spark, sf_dir, "documents")),
+    )
 
 
 def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,7 +279,8 @@ def token_pad_id() -> int:
 def packing_merges() -> list:
     """The fixed packing tokenizer: greedy training is iterative, so the
     30-merge table is exactly the first 30 rows of the golden merge list
-    (prefix property verified against budget_merges(sf0.01, 30))."""
+    (prefix property verified against a 30-merge train_bpe_merges on
+    sf0.01)."""
     return list(_SF001_GOLDEN_MERGES[:PACK_BPE_MERGES])
 
 
@@ -392,25 +391,8 @@ FROM final, LATERAL (SELECT unnest(generate_series(1, len(merges))) AS i) g(i)
 def _bpe_token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-on-corpus + encode-corpus in one query (the self-tokenization
     shape a tokenizer-cost survey runs). The merge table is a dataset property
-    of sf_dir — memoized like embedding_dim / collect_matrix."""
-    docs = load(spark, sf_dir, "documents")
-    merges = _MERGE_CACHE.get(sf_dir)
-    if merges is None:
-        merges = train_bpe_merges(docs)
-        _MERGE_CACHE[sf_dir] = merges
-    return bpe_token_counts(docs, merges)
-
-
-def budget_merges(spark: SparkSession, sf_dir: str, n_merges: int) -> list:
-    """Merge table at an explicit budget, cached per (sf_dir, budget) — the
-    ONE train-or-cache path shared by pack_sequences_bpe and
-    text_bpe_counts_budget (previously duplicated line-for-line)."""
-    key = (sf_dir, n_merges)
-    merges = _MERGE_CACHE.get(key)
-    if merges is None:
-        merges = train_bpe_merges(load(spark, sf_dir, "documents"), n_merges=n_merges)
-        _MERGE_CACHE[key] = merges
-    return merges
+    of sf_dir, memoized by _merges_for."""
+    return bpe_token_counts(load(spark, sf_dir, "documents"), _merges_for(spark, sf_dir))
 
 
 def lexicon_count_ctes(lexicon: tuple) -> str:

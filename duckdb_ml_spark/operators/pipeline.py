@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark import memo
 from duckdb_ml_spark.operators.textnorm import exploded_shingles, tokens, tokens_sql
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
@@ -40,11 +41,9 @@ PACK_CAPACITY = 256  # tokens per pack
 # item 4: each used to rebuild the exploded shingles from scratch). Shingling
 # is per-document, so every sub-corpus's shingles are a doc_id FILTER of the
 # full relation. localCheckpoint(eager) materializes (doc_id, shingle) to
-# executor storage once per (session, sf_dir); at 100 TB this is the
-# precomputed n-gram index every production decontam pipeline maintains as a
-# table — a dataset property, same cache contract as collect_matrix /
-# _MERGE_CACHE (builders that hit it cold are listed in _EXEC_AT_BUILD).
-_SHINGLE_CACHE: dict = {}
+# executor storage once per (sf_dir, n); at 100 TB this is the precomputed
+# n-gram index every production decontam pipeline maintains as a table — a
+# dataset property (builders that hit it cold are listed in _EXEC_AT_BUILD).
 
 
 # Above this doc count the shingle relation is NOT localCheckpoint'ed:
@@ -67,15 +66,14 @@ SHINGLE_CHECKPOINT_DOC_GATE = 1_000_000
 def corpus_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     from duckdb_ml_spark.operators.dedup import _cached_count
 
-    key = (id(spark), sf_dir, n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         df = exploded_shingles(docs, n=n)
         if _cached_count(docs, (sf_dir, "documents", "rowcount")) <= SHINGLE_CHECKPOINT_DOC_GATE:
             df = df.localCheckpoint(eager=True)
-        _SHINGLE_CACHE[key] = df
-    return df
+        return df
+
+    return memo.get(spark, (sf_dir, "documents", "shingles", n), build)
 
 
 # Above this corpus doc count the decontam/containment eval-gram side is no

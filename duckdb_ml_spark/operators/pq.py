@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from duckdb_ml_spark import memo
 from pyspark.sql.window import Window
 
 from duckdb_ml_spark.plans.relational import QuerySpec
@@ -88,9 +90,6 @@ def train_pq_codebooks(X, m: int = PQ_M, k: int = PQ_K, seed: int = PQ_SEED,
     return books
 
 
-_CODEBOOK_CACHE: dict = {}
-
-
 def pq_codebooks_for(spark: SparkSession, sf_dir: str):
     """Train-once codebooks per sf_dir (dataset artifact, like the IVF
     centroid table). Training sample: vec_id stride so the collect stays
@@ -98,14 +97,14 @@ def pq_codebooks_for(spark: SparkSession, sf_dir: str):
     from duckdb_ml_spark.operators.dedup import _cached_count
     from duckdb_ml_spark.operators.vec import collect_matrix
 
-    key = (sf_dir, PQ_M, PQ_K, PQ_SEED)
-    books = _CODEBOOK_CACHE.get(key)
-    if books is None:
+    def train():
         emb = load(spark, sf_dir, "embeddings")
-        n = _cached_count(emb, sf_dir)
+        n = _cached_count(emb, (sf_dir, "embeddings"))
         stride = max(1, -(-n // PQ_TRAIN_CAP))
         sample = emb.where(F.col("vec_id") % stride == 0) if stride > 1 else emb
-        ids, X = collect_matrix(sample, "vec_id", cache_key=(sf_dir, "pq_train", stride))
+        ids, X = collect_matrix(
+            sample, "vec_id", cache_key=(sf_dir, "embeddings", "pq_train", stride)
+        )
         # collect_matrix rows arrive in scan/partition order; k-means init
         # seeds from row permutation, so unsorted input makes codebooks (and
         # the exact-top-k oracle's empirical recall) layout-dependent. Sort by
@@ -113,9 +112,10 @@ def pq_codebooks_for(spark: SparkSession, sf_dir: str):
         import numpy as np
 
         X = X[np.argsort(ids, kind="stable")]
-        books = train_pq_codebooks(X)
-        _CODEBOOK_CACHE[key] = books
-    return books
+        return train_pq_codebooks(X)
+
+    key = (sf_dir, "embeddings", "pq_codebooks", PQ_M, PQ_K, PQ_SEED)
+    return memo.get(spark, key, train)
 
 
 def _encode_batch(X, books):
@@ -317,7 +317,9 @@ def _pq_recall_band_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     books = pq_codebooks_for(spark, sf_dir)
-    q_ids, Q = collect_matrix(queries, "vec_id", cache_key=(sf_dir, "bf_queries"))
+    q_ids, Q = collect_matrix(
+        queries, "vec_id", cache_key=(sf_dir, "embeddings", "bf_queries")
+    )
     scored = pq_eval_scores(emb, q_ids, Q, books)
     # LINEAR pipeline — every relation has exactly one consumer, so the eval
     # kernel executes once (a DataFrame consumed twice re-runs its lineage;
@@ -358,11 +360,13 @@ def _pq_recall_band_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_ml_spark.operators.vec import collect_matrix, embedding_dim
 
     emb = load(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb, cache_key=sf_dir)
+    dim = embedding_dim(emb, cache_key=(sf_dir, "embeddings"))
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    exact = brute_force_topk(emb, queries, dim=dim, cache_key=sf_dir)
+    exact = brute_force_topk(emb, queries, dim=dim, cache_key=(sf_dir, "embeddings"))
     books = pq_codebooks_for(spark, sf_dir)
-    q_ids, Q = collect_matrix(queries, "vec_id", cache_key=(sf_dir, "bf_queries"))
+    q_ids, Q = collect_matrix(
+        queries, "vec_id", cache_key=(sf_dir, "embeddings", "bf_queries")
+    )
     codes = pq_encode(emb, books)
     shortlist = pq_adc_shortlist(codes, q_ids, Q, books).select(
         "query_id", "neighbor_id"
@@ -458,7 +462,9 @@ def _pq_topk_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     books = pq_codebooks_for(spark, sf_dir)
-    q_ids, Q = collect_matrix(queries, "vec_id", cache_key=(sf_dir, "bf_queries"))
+    q_ids, Q = collect_matrix(
+        queries, "vec_id", cache_key=(sf_dir, "embeddings", "bf_queries")
+    )
     codes = pq_encode(emb, books)
     shortlist = pq_adc_shortlist(codes, q_ids, Q, books).select(
         "query_id", "neighbor_id"

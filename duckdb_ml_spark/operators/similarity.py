@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from duckdb_ml_spark import memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -66,7 +67,7 @@ def brute_force_topk(
     from duckdb_ml_spark.operators.vec import collect_matrix, cosine_scores_vs_broadcast
 
     q_ids, Q = collect_matrix(
-        queries, id_col, cache_key=None if cache_key is None else (cache_key, "bf_queries")
+        queries, id_col, cache_key=None if cache_key is None else (*cache_key, "bf_queries")
     )
     scored = cosine_scores_vs_broadcast(emb, q_ids, Q, id_col).select(
         "query_id", F.col("row_id").alias("neighbor_id"), "cos"
@@ -83,9 +84,10 @@ def _brute_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_ml_spark.operators.vec import embedding_dim
 
     emb = load(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb, cache_key=sf_dir)
+    dim = embedding_dim(emb, cache_key=(sf_dir, "embeddings"))
     return brute_force_topk(
-        emb, emb.where(F.col("vec_id") < N_QUERIES), dim=dim, cache_key=sf_dir
+        emb, emb.where(F.col("vec_id") < N_QUERIES), dim=dim,
+        cache_key=(sf_dir, "embeddings"),
     )
 
 
@@ -155,14 +157,14 @@ def ivf_topk(
         cent_ids, CM = collect_matrix(
             emb.where(F.col(id_col) % stride == 0),
             id_col,
-            cache_key=None if cache_key is None else (cache_key, "ivf_cent", stride),
+            cache_key=None if cache_key is None else (*cache_key, "ivf_cent", stride),
         )
         order = np.argsort(cent_ids)  # deterministic c_id ASC tie-break base order
         cent_ids, CM = cent_ids[order], CM[order]
 
     # query probe lists: nprobe nearest centroids per query — driver NumPy
     q_ids, QM = collect_matrix(
-        queries, id_col, cache_key=None if cache_key is None else (cache_key, "ivf_queries")
+        queries, id_col, cache_key=None if cache_key is None else (*cache_key, "ivf_queries")
     )
     qc = _seq_cosine_matrix(QM, CM)
     probe_map: dict = {}  # bucket c_id → [(query_id, query matrix row), ...]
@@ -230,9 +232,10 @@ def _ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_ml_spark.operators.vec import embedding_dim
 
     emb = load(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb, cache_key=sf_dir)
+    dim = embedding_dim(emb, cache_key=(sf_dir, "embeddings"))
     return ivf_topk(
-        emb, emb.where(F.col("vec_id") < N_QUERIES), dim=dim, cache_key=sf_dir
+        emb, emb.where(F.col("vec_id") < N_QUERIES), dim=dim,
+        cache_key=(sf_dir, "embeddings"),
     )
 
 
@@ -292,7 +295,7 @@ def normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_shipped(spark)
     emb = load(spark, sf_dir, "embeddings")
-    dim = embedding_dim(emb, cache_key=sf_dir)
+    dim = embedding_dim(emb, cache_key=(sf_dir, "embeddings"))
 
     def _kernel(batches):
         import numpy as np
@@ -412,12 +415,12 @@ def knn_join(
     from duckdb_ml_spark.operators.vec import score_id_pairs_cosine
 
     emb = load(spark, sf_dir, "embeddings")
-    if _cached_count(emb, sf_dir) <= 65536:
+    if _cached_count(emb, (sf_dir, "embeddings")) <= 65536:
         from duckdb_ml_spark.operators.vec import _seq_cosine_matrix, collect_matrix
         from duckdb_ml_spark.session import ensure_shipped
 
         ensure_shipped(spark)
-        ids, M = collect_matrix(emb, "vec_id", cache_key=(sf_dir, "corpus"))
+        ids, M = collect_matrix(emb, "vec_id", cache_key=(sf_dir, "embeddings", "corpus"))
         H = _hyperplanes(M.shape[1], nbits)
         weights = np.array([1 << b for b in range(nbits)], dtype=np.int64)
         proj = np.zeros((len(M), nbits))
@@ -490,7 +493,7 @@ def knn_join(
     # Mirror via EXPLODE, not a self-union — a union would reference the
     # kernel subplan from two branches and (with no exchange boundary to
     # reuse) execute the whole candidate+scoring pipeline twice
-    scored_und = score_id_pairs_cosine(und, emb, cache_key=sf_dir)
+    scored_und = score_id_pairs_cosine(und, emb, cache_key=(sf_dir, "embeddings"))
     scored = scored_und.select(
         F.explode(
             F.array(
@@ -564,7 +567,8 @@ def quantized_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFram
     ensure_shipped(spark)
     emb = load(spark, sf_dir, "embeddings")
     q_ids, Q = collect_matrix(
-        emb.where(F.col("vec_id") < N_QUERIES), "vec_id", cache_key=(sf_dir, "bf_queries")
+        emb.where(F.col("vec_id") < N_QUERIES), "vec_id",
+        cache_key=(sf_dir, "embeddings", "bf_queries"),
     )
     # query-side L2 in the same left-fold order as the SQL sum chain
     l2q = np.zeros(Q.shape[0])
@@ -736,18 +740,19 @@ def build_ivf_index(
     + `assign` parquet PARTITIONED BY bucket. This is the serving shape every
     ANN system uses — the corpus-scale assignment pass runs ONCE at build;
     a query then touches only its probed buckets' partitions (directory
-    pruning, asserted in tests). Idempotent per path (marker file)."""
+    pruning, asserted in tests). Idempotent per path: `_SUCCESS` is written
+    last, and a path that has it is left as it is."""
     import os
 
     from duckdb_ml_spark.operators.vec import assign_nearest_vs_broadcast, collect_matrix
 
-    marker = os.path.join(path, "_INDEX_READY")
+    marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return
     emb = load(spark, sf_dir, "embeddings")
     cent_ids, CM = collect_matrix(
         emb.where(F.col("vec_id") % stride == 0), "vec_id",
-        cache_key=(sf_dir, "ivf_cent", stride),
+        cache_key=(sf_dir, "embeddings", "ivf_cent", stride),
     )
     import numpy as np
 
@@ -763,9 +768,6 @@ def build_ivf_index(
     )
     cdf.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     open(marker, "w").close()
-
-
-_INDEX_CACHE: dict = {}
 
 
 def ivf_topk_from_index(
@@ -792,21 +794,19 @@ def ivf_topk_from_index(
     )
 
     # a serving process holds the index open: centroid matrix + the assign
-    # table's file listing are loaded once per (session, path), not per query
-    ckey = (id(spark), path)
-    cached = _INDEX_CACHE.get(ckey)
-    if cached is None:
+    # table's file listing are loaded once per (sf_dir, path), not per query
+    def open_index():
         crows = spark.read.parquet(os.path.join(path, "centroids")).collect()
         crows.sort(key=lambda r: r.c_id)
-        cached = (
+        return (
             np.array([r.c_id for r in crows], dtype=np.int64),
             np.array([r.embedding for r in crows], dtype=np.float64),
             spark.read.parquet(os.path.join(path, "assign")),
         )
-        _INDEX_CACHE[ckey] = cached
-    cent_ids, CM, assign_df = cached
+
+    cent_ids, CM, assign_df = memo.get(spark, (sf_dir, "ivf_index", path), open_index)
     q_ids, QM = collect_matrix(
-        queries, "vec_id", cache_key=(sf_dir, "ivf_queries")
+        queries, "vec_id", cache_key=(sf_dir, "embeddings", "ivf_queries")
     )
     qc = _seq_cosine_matrix(QM, CM)
     probe_rows = []
@@ -833,10 +833,13 @@ def ivf_topk_from_index(
 
 
 def _ivf_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from duckdb_ml_spark.plans.scale import layout_cache_dir
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(repo, ".tmp", os.path.basename(sf_dir), "ivf_index")
+    # fingerprinted by the embeddings file: a changed corpus, or another
+    # sf_dir with the same basename, gets its own index dir
+    path = layout_cache_dir(
+        sf_dir, "embeddings.parquet", "ivf_index", params=f"stride{CENTROID_STRIDE}"
+    )
     build_ivf_index(spark, sf_dir, path)
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk_from_index(
@@ -870,21 +873,17 @@ def tfidf_weights(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-# Materialized TF-IDF inverted index per (session, sf_dir) — the weight
-# relation is consumed by BOTH join legs and its df-broadcast subplan, which
-# would otherwise re-execute the explode+groupBy lineage three times per run
-# (measured: 1.9 → 0.5 s exec). At 100 TB the inverted index is a maintained
-# table, exactly like corpus_shingles / the signature table.
-_TFIDF_CACHE: dict = {}
-
-
 def _tfidf_weights_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    df = _TFIDF_CACHE.get(key)
-    if df is None:
-        df = tfidf_weights(load(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-        _TFIDF_CACHE[key] = df
-    return df
+    """Materialized TF-IDF inverted index per sf_dir — the weight relation is
+    consumed by BOTH join legs and its df-broadcast subplan, which would
+    otherwise re-execute the explode+groupBy lineage three times per run
+    (measured: 1.9 → 0.5 s exec). At 100 TB the inverted index is a
+    maintained table, exactly like corpus_shingles / the signature table."""
+    return memo.get(
+        spark,
+        (sf_dir, "documents", "tfidf_weights"),
+        lambda: tfidf_weights(load(spark, sf_dir, "documents")).localCheckpoint(eager=True),
+    )
 
 
 def _tfidf_rescore_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark import memo
+
 
 def seq_sum(terms: list[Column]) -> Column:
     """Left-fold sum starting at 0.0 (matches F.aggregate's order exactly)."""
@@ -31,24 +33,21 @@ def seq_sum(terms: list[Column]) -> Column:
     return acc
 
 
-_DIM_CACHE: dict[str, int] = {}
-
-
-def embedding_dim(df: DataFrame, arr_col: str = "embedding", cache_key: str | None = None) -> int:
+def embedding_dim(df: DataFrame, arr_col: str = "embedding", cache_key=None) -> int:
     """Probe the (uniform) embedding dimensionality with a 1-row job.
 
-    Pass cache_key (e.g. the sf_dir) to skip repeat probe jobs for the same
-    source — dim is a dataset property, not a per-query one.
+    Pass cache_key (e.g. (sf_dir, "embeddings")) to skip repeat probe jobs for
+    the same source — dim is a dataset property, not a per-query one.
     """
-    if cache_key is not None and cache_key in _DIM_CACHE:
-        return _DIM_CACHE[cache_key]
-    row = df.select(F.size(arr_col).alias("d")).first()
-    if row is None:
-        raise ValueError(f"cannot infer dim: '{arr_col}' has no rows")
-    dim = int(row["d"])
-    if cache_key is not None:
-        _DIM_CACHE[cache_key] = dim
-    return dim
+
+    def probe() -> int:
+        row = df.select(F.size(arr_col).alias("d")).first()
+        if row is None:
+            raise ValueError(f"cannot infer dim: '{arr_col}' has no rows")
+        return int(row["d"])
+
+    key = None if cache_key is None else (*cache_key, arr_col, "dim")
+    return memo.get(df.sparkSession, key, probe)
 
 
 def unpack(df: DataFrame, arr_col: str, dim: int, prefix: str, keep: list[str]) -> DataFrame:
@@ -248,14 +247,6 @@ def exact_tril_any_ge(M, tau: float, eps: float = _ARGMAX_EPS):
     return dropped
 
 
-_MATRIX_CACHE: dict = {}
-
-# (cache_key, id_col, pos_threshold) -> collected positive-pair rows of
-# contrastive_pairs — a deterministic dataset artifact (same contract as
-# _SIG_CACHE); only bounded (≤100k-row) lists are ever cached.
-_POS_PAIRS_CACHE: dict = {}
-
-
 def gather_indices(order, sorted_ids, wanted):
     """Matrix-row indices for `wanted` ids, given argsort(order)/sorted ids.
 
@@ -280,27 +271,24 @@ def collect_matrix(df: DataFrame, id_col: str, arr_col: str = "embedding", cache
     """(ids int64 array, float64 matrix) from a SMALL DataFrame (driver collect).
 
     The broadcast side of the matrix kernels. At scale, tile the input and loop.
-    `cache_key`: memoize the collected matrix for an immutable source (a probe
-    set / centroid sample of a fixed sf_dir table) — at scale these are
-    precomputed artifacts, not per-query collects; same pattern as
-    embedding_dim's cache.
+    `cache_key`: memoize the collected matrix for a source (a probe set /
+    centroid sample of an sf_dir table) — at scale these are precomputed
+    artifacts, not per-query collects.
     """
     import numpy as np
 
-    if cache_key is not None and cache_key in _MATRIX_CACHE:
-        return _MATRIX_CACHE[cache_key]
-    pdf = df.select(id_col, arr_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    if len(pdf) == 0:
-        # empty selection: a well-formed (0, 0) pair so callers can raise
-        # their own actionable error (np.stack on empty throws a generic
-        # "need at least one array" — ADVICE r7 low)
-        M = np.zeros((0, 0), dtype=np.float64)
-    else:
-        M = np.stack(pdf[arr_col].to_numpy()).astype(np.float64)
-    if cache_key is not None:
-        _MATRIX_CACHE[cache_key] = (ids, M)
-    return ids, M
+    def build():
+        pdf = df.select(id_col, arr_col).toPandas()
+        ids = pdf[id_col].to_numpy()
+        if len(pdf) == 0:
+            # empty selection: a well-formed (0, 0) pair so callers can raise
+            # their own actionable error (np.stack on empty throws a generic
+            # "need at least one array" — ADVICE r7 low)
+            return ids, np.zeros((0, 0), dtype=np.float64)
+        return ids, np.stack(pdf[arr_col].to_numpy()).astype(np.float64)
+
+    key = None if cache_key is None else (*cache_key, id_col, arr_col, "matrix")
+    return memo.get(df.sparkSession, key, build)
 
 
 def cosine_pairs_tiled(
@@ -322,9 +310,8 @@ def cosine_pairs_tiled(
     100 TB scale run the tiles as separate jobs (append per tile) or — better —
     bound candidates with LSH instead of exact all-pairs.
 
-    `cache_key` (e.g. the sf_dir): memoize the row count and tile matrices of
-    an immutable source — dataset properties, not per-query jobs (same pattern
-    as embedding_dim / collect_matrix)."""
+    `cache_key` (e.g. (sf_dir, "embeddings")): memoize the row count and tile
+    matrices of the source — dataset properties, not per-query jobs."""
     from duckdb_ml_spark.operators.dedup import _cached_count
 
     n = _cached_count(df, cache_key)
@@ -336,7 +323,7 @@ def cosine_pairs_tiled(
             tile,
             id_col,
             arr_col,
-            cache_key=None if cache_key is None else (cache_key, "tile", n_tiles, t),
+            cache_key=None if cache_key is None else (*cache_key, "tile", n_tiles, t),
         )
         parts.append(
             cosine_pairs_vs_broadcast(df, ids, M, id_col, arr_col, threshold=threshold)
@@ -419,7 +406,7 @@ def score_id_pairs_cosine(
     ensure_shipped(spark)
     if _cached_count(emb, cache_key) <= max_matrix_rows:
         ids, M = collect_matrix(
-            emb, id_col, cache_key=None if cache_key is None else (cache_key, "corpus")
+            emb, id_col, cache_key=None if cache_key is None else (*cache_key, "corpus")
         )
         bc = spark.sparkContext.broadcast((ids, M))
 
@@ -610,19 +597,22 @@ def contrastive_pairs(
     # population) → one short-circuiting collect, anchors derived driver-side;
     # above the gate, persist and keep the lazy branches. The collected pair
     # list is a deterministic dataset artifact (pure function of the corpus
-    # + threshold), memoized like _SIG_CACHE / the IVF centroid table — a
-    # repeat build reuses it instead of re-running the tiled kernel
-    # (VERDICT r5 item 6: the re-execution was ~0.85 s of every call).
-    pkey = None if cache_key is None else (cache_key, id_col, float(pos_threshold))
-    probe = _POS_PAIRS_CACHE.get(pkey) if pkey is not None else None
-    if probe is None:
-        pos_plan = cosine_pairs_tiled(
+    # + threshold), memoized in the artifact store — a repeat build reuses it
+    # instead of re-running the tiled kernel (VERDICT r5 item 6: the
+    # re-execution was ~0.85 s of every call). None marks a list above the
+    # gate, which stays lazy.
+    def pos_plan():
+        return cosine_pairs_tiled(
             emb, id_col, arr_col, threshold=pos_threshold, cache_key=cache_key
         )
-        probe = pos_plan.limit(100_001).collect()
-        if pkey is not None and len(probe) <= 100_000:
-            _POS_PAIRS_CACHE[pkey] = probe
-    if len(probe) <= 100_000:
+
+    def collect_pos():
+        rows = pos_plan().limit(100_001).collect()
+        return rows if len(rows) <= 100_000 else None
+
+    pkey = None if cache_key is None else (*cache_key, id_col, float(pos_threshold), "pos_pairs")
+    probe = memo.get(spark, pkey, collect_pos)
+    if probe is not None:
         pos = spark.createDataFrame(
             [(r.vec_a, r.vec_b) for r in probe], "anchor bigint, other bigint"
         )
@@ -630,7 +620,7 @@ def contrastive_pairs(
             [(a,) for a in sorted({r.vec_a for r in probe})], "anchor bigint"
         )
     else:
-        pp = pos_plan.persist()
+        pp = pos_plan().persist()
         pos = pp.select(F.col("vec_a").alias("anchor"), F.col("vec_b").alias("other"))
         anchors = pos.select("anchor").distinct()
     cand = anchors.select(
@@ -651,7 +641,7 @@ def contrastive_pairs(
     # set is one-per-anchor over the UNBOUNDED duplicate population — a
     # forced broadcast there is a driver blowup (review r6), so the
     # large-corpus branch keeps the gracefully-degrading shuffled semi-join.
-    if len(probe) <= 100_000:
+    if probe is not None:
         cand = emb.select(F.col(id_col).alias("other")).join(
             F.broadcast(cand), on="other", how="inner"
         ).select("anchor", "other")

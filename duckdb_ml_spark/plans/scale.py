@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark import memo
+
 
 def salted_agg(
     df: DataFrame,
@@ -206,17 +208,8 @@ def layout_cache_dir(sf_dir: str, table_file, name: str, params: str = "") -> st
     # re-registers a stale pre-filtered layout (r12 review finding)
     files = [table_file] if isinstance(table_file, str) else list(table_file)
     h = hashlib.sha1()
-    paths = []
-    for tf in files:
-        src = _os.path.join(sf_dir, tf)
-        if _os.path.isdir(src):
-            for root, _, fs in _os.walk(src):
-                paths += [_os.path.join(root, f) for f in fs]
-        elif _os.path.exists(src):
-            paths.append(src)
-    for p in sorted(paths):
-        st = _os.stat(p)
-        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
+    for p, size, mtime_ns in memo.fingerprint(sf_dir, files):
+        h.update(f"{p}:{size}:{mtime_ns};".encode())
     h.update(params.encode())  # layout parameters invalidate the cache too
     fp = h.hexdigest()[:10]
     parent = _os.path.join(
@@ -490,10 +483,9 @@ FROM events GROUP BY event_type
 HOT_KEY_ROWS = 1_000_000  # a key is hot when it would serialize ≥1M fact
 HOT_SAMPLE_FRACTION = 0.001  # rows onto one join task
 
-# hot-key lists are dataset properties of an immutable table (the same cache
-# contract as dedup._SIG_CACHE / corpus_shingles): keyed on caller-supplied
-# (sf_dir, table, key, threshold), so repeat builds skip the sample job
-_HOT_KEYS_CACHE: dict = {}
+# hot-key lists are dataset properties of a table: memoized on the
+# caller-supplied cache_key + (key, threshold, fraction), so repeat builds
+# skip the sample job
 
 
 def adaptive_salted_join(
@@ -540,12 +532,13 @@ def adaptive_salted_join(
     ck = (
         None
         if cache_key is None
-        else (cache_key, on, hot_threshold, sample_fraction)
+        else (*cache_key, on, hot_threshold, sample_fraction, "hot_keys")
     )
-    hot = _HOT_KEYS_CACHE.get(ck) if ck is not None else None
-    if hot is None:
-        cut = max(1, int(hot_threshold * sample_fraction / 2))
-        hot = [
+    cut = max(1, int(hot_threshold * sample_fraction / 2))
+    hot = memo.get(
+        large.sparkSession,
+        ck,
+        lambda: [
             r[0]
             for r in large.sample(fraction=sample_fraction, seed=42)
             .groupBy(on)
@@ -553,9 +546,8 @@ def adaptive_salted_join(
             .where(F.col("count") > cut)
             .select(on)
             .collect()
-        ]
-        if ck is not None:
-            _HOT_KEYS_CACHE[ck] = hot
+        ],
+    )
     if not hot:
         return large.join(small, on)
     is_hot = F.col(on).isin(hot)
@@ -748,14 +740,12 @@ def key_span_fraction(path: str, key: str) -> float | None:
     return sum((b - a) / (gmax - gmin) * r for a, b, r in spans) / n
 
 
-# advisor verdicts are dataset properties of an immutable table (the same
-# memo contract as _HOT_KEYS_CACHE / dedup._SIG_CACHE): keyed on the
+# advisor verdicts are dataset properties of a table: memoized on the
 # caller-supplied cache_key + decision inputs, so the query builders that
 # route through the advisor (skew_salted_join, revenue_by_nation,
 # layout_advised_scan) pay its count/ndv/sample jobs once per session, not
 # per build — required for the r14 integration to leave steady-state bench
 # times unchanged
-_ADVICE_CACHE: dict = {}
 
 
 def layout_advise(
@@ -767,25 +757,20 @@ def layout_advise(
     table_bytes: int | None = None,
     cache_key=None,
 ) -> dict:
-    if cache_key is not None:
-        # the gate constants join the memo key: they are module globals the
-        # tests monkeypatch to force regimes, and a verdict cached under one
-        # gate set must never answer for another
-        akey = (
-            cache_key, key, workload, second_key, table_path, table_bytes,
-            _BUCKET_LAYOUT_GATE_BYTES, HOT_KEY_ROWS, PARTITION_NDV_MAX,
-            PARTITION_MIN_ROWS_PER_VALUE, BLOOM_SPAN_BOUNDARY,
-        )
-        hit = _ADVICE_CACHE.get(akey)
-        if hit is None:
-            hit = _layout_advise_impl(
-                df, key, workload, second_key, table_path, table_bytes,
-                cache_key,
-            )
-            _ADVICE_CACHE[akey] = hit
-        return hit
-    return _layout_advise_impl(
-        df, key, workload, second_key, table_path, table_bytes, cache_key
+    # the gate constants join the memo key: they are module globals the
+    # tests monkeypatch to force regimes, and a verdict cached under one
+    # gate set must never answer for another
+    akey = None if cache_key is None else (
+        *cache_key, key, workload, second_key, table_path, table_bytes,
+        _BUCKET_LAYOUT_GATE_BYTES, HOT_KEY_ROWS, PARTITION_NDV_MAX,
+        PARTITION_MIN_ROWS_PER_VALUE, BLOOM_SPAN_BOUNDARY, "layout_advice",
+    )
+    return memo.get(
+        df.sparkSession,
+        akey,
+        lambda: _layout_advise_impl(
+            df, key, workload, second_key, table_path, table_bytes, cache_key
+        ),
     )
 
 

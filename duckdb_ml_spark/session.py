@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from duckdb_ml_spark import memo
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Below this input size the engine runs in "compact" mode: AQE off and few
@@ -32,21 +34,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 COMPACT_INPUT_BYTES = 2 << 30
 
 
-def _dir_bytes(path: str) -> int:
-    """Total bytes of the parquet inputs under sf_dir (0 if unreadable)."""
-    total = 0
-    try:
-        with os.scandir(path) as it:
-            for e in it:
-                try:
-                    total += e.stat().st_size if e.is_file() else _dir_bytes(e.path)
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    return total
-
-
 def get_spark(
     app_name: str = "duckdb_ml_spark",
     shuffle_partitions: int | None = None,
@@ -54,7 +41,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults sized to the data."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    total_bytes = _dir_bytes(sf_dir or DEFAULT_SF_DIR)
+    total_bytes = sum(size for _, size, _ in memo.fingerprint(sf_dir or DEFAULT_SF_DIR))
     compact = total_bytes < COMPACT_INPUT_BYTES
     if shuffle_partitions is None:
         env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")

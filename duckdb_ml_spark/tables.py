@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_ml_spark import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -22,14 +24,12 @@ TABLE_NAMES = (
 )
 
 
-# Session-prep runs ONCE per SparkSession and loaded tables are memoized per
-# (session, sf_dir, name): a parquet `read` costs driver RPCs + a footer/schema
-# read every call, and the suite calls load() ~60 times over 10 immutable
-# tables. The cached object is the lazy DataFrame (the analyzed plan), NOT
-# materialized data — every query still scans parquet on the executors, with
-# full pushdown/pruning, exactly as an uncached read would.
-_PREPARED: dict[int, SparkSession] = {}  # strong refs pin id() uniqueness
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# Session prep runs once per session and loaded tables are memoised per
+# (sf_dir, name) in the artifact store: a parquet `read` costs driver RPCs +
+# a footer/schema read every call, and the suite calls load() ~60 times over
+# 10 tables. The memoised object is the lazy DataFrame (the analyzed plan),
+# NOT materialized data — every query still scans parquet on the executors,
+# with full pushdown/pruning, exactly as an uncached read would.
 
 
 def _prepare(spark: SparkSession) -> None:
@@ -41,15 +41,15 @@ def _prepare(spark: SparkSession) -> None:
       otherwise rejects.
     - ensure_shipped: package importable on executor workers whatever the cwd.
     """
-    key = id(spark)
-    if key in _PREPARED:
-        return
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from duckdb_ml_spark.session import ensure_shipped
 
-    ensure_shipped(spark)
-    _PREPARED[key] = spark
+    def prep() -> None:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        from duckdb_ml_spark.session import ensure_shipped
+
+        ensure_shipped(spark)
+
+    memo.get(spark, (None, "session_prep"), prep)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,36 +60,33 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncation; a double-typed division would lose precision above 2^53 ns).
     """
     _prepare(spark)
-    key = (id(spark), sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        if name == "events":
-            from pyspark.sql import functions as F
-            from pyspark.sql.types import LongType
+    return memo.get(spark, (sf_dir, "table", name), lambda: _read(spark, sf_dir, name))
 
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            # The driver's testdata has stored ts as TIMESTAMP(NANOS) (read as
-            # long via nanosAsLong) in some rounds and TIMESTAMP(MICROS) in
-            # others; normalize either encoding to a µs TimestampType column.
-            if isinstance(df.schema["ts"].dataType, LongType):
-                # Guard the ns→µs div-1000: a LongType ts must actually be
-                # TIMESTAMP(NANOS) read via nanosAsLong. If a future round ships
-                # ts as plain INT64 µs, dividing would silently misscale 1000×.
-                import pyarrow.parquet as pq
 
-                field = pq.read_schema(f"{sf_dir}/{name}.parquet").field("ts")
-                if not (str(field.type).startswith("timestamp[ns")):
-                    raise ValueError(
-                        f"events.ts read as int64 but parquet logical type is "
-                        f"{field.type}, not TIMESTAMP(NANOS) — refusing ns→µs conversion"
-                    )
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _CACHE[key] = df
-    return df
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name != "events":
+        return df
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    # The events table may store ts as TIMESTAMP(NANOS) (read as long via
+    # nanosAsLong) or TIMESTAMP(MICROS); normalize either encoding to a µs
+    # TimestampType column.
+    if not isinstance(df.schema["ts"].dataType, LongType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    # Guard the ns→µs div-1000: a LongType ts must actually be
+    # TIMESTAMP(NANOS) read via nanosAsLong. If ts ever arrives as plain
+    # INT64 µs, dividing would silently misscale 1000×.
+    import pyarrow.parquet as pq
+
+    field = pq.read_schema(f"{sf_dir}/{name}.parquet").field("ts")
+    if not (str(field.type).startswith("timestamp[ns")):
+        raise ValueError(
+            f"events.ts read as int64 but parquet logical type is "
+            f"{field.type}, not TIMESTAMP(NANOS) — refusing ns→µs conversion"
+        )
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
@@ -104,16 +101,4 @@ def table_size_bytes(sf_dir: str, table: str) -> int:
     os.path.getsize on a directory returns the dirent size (~4 KB), which
     silently disabled every >=1 GB layout gate on directory tables — the
     2048x skew join fell back to the full shuffle path this way (r12)."""
-    import os
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return 0
+    return sum(size for _, size, _ in memo.fingerprint(sf_dir, [f"{table}.parquet"]))

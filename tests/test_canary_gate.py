@@ -36,28 +36,24 @@ def test_retired_canaries_not_registered():
     assert "canary_null_bool" not in names
 
 
-def test_plan_cache_resets_on_session_change(spark):
-    """VERDICT r13 nit: the queries() plan cache keyed on id(spark) must not
-    accumulate entries for dead sessions — a new session id resets it."""
+def test_plan_cache_resets_on_session_change(spark, sf_dir):
+    """VERDICT r13 nit: memoized queries() plans must not outlive their
+    session — a new session empties the artifact store, so no entry of the
+    old one is ever served again."""
     import __spark_entry__ as entrymod
+    from duckdb_ml_spark import memo
 
-    entrymod._PLAN_CACHE.clear()
-    entrymod._PLAN_CACHE_SESSION[0] = None
     qs = entrymod.queries()
-    qs["range_ids"](spark, "/root/testdata/sf0.001")
-    n1 = len(entrymod._PLAN_CACHE)
-    assert n1 >= 1 and entrymod._PLAN_CACHE_SESSION[0] == id(spark)
+    df = qs["range_ids"](spark, sf_dir)
+    assert qs["range_ids"](spark, sf_dir) is df  # memoized within a session
 
     class _Fake:  # a different session identity; builder never executes it
         pass
 
-    fake = _Fake()
     try:
-        qs["range_ids"](fake, "/root/testdata/sf0.001")
+        qs["range_ids"](_Fake(), sf_dir)
     except Exception:
         pass  # the builder will choke on the fake session — irrelevant here
-    assert entrymod._PLAN_CACHE_SESSION[0] == id(fake)
-    # the real-session entries are GONE (no cross-session growth)
-    assert all(k[0] == id(fake) for k in entrymod._PLAN_CACHE)
-    entrymod._PLAN_CACHE.clear()
-    entrymod._PLAN_CACHE_SESSION[0] = None
+    # the real session's plan is GONE: the next call rebuilds it
+    assert memo.get(spark, (sf_dir, "plan", "range_ids"), lambda: None) is None
+    memo.clear()

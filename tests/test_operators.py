@@ -601,7 +601,7 @@ def test_embedding_lsh_masked_path_matches_banded_plan(spark, sf_dir):
             embedding_lsh_candidates(embedding_lsh_signatures(spark, sf_dir)),
             emb,
             0.4,
-            cache_key=sf_dir,
+            cache_key=(sf_dir, "embeddings"),
         ).collect()
     }
     masked = {(r.vec_a, r.vec_b) for r in embedding_lsh_pairs(spark, sf_dir).collect()}
@@ -961,7 +961,8 @@ def test_ivf_index_prunes_partitions_and_matches_fresh(spark, sf_dir, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     scan_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "bucket" in scan_line
-    fresh = ivf_topk(emb, queries, dim=embedding_dim(emb, cache_key=sf_dir), cache_key=sf_dir)
+    key = (sf_dir, "embeddings")
+    fresh = ivf_topk(emb, queries, dim=embedding_dim(emb, cache_key=key), cache_key=key)
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in fresh.collect()}
 
 
@@ -1922,21 +1923,20 @@ def test_per_source_k_stale_size_cache_detected(spark, monkeypatch):
     map. The coalesce keep-all arm surfaces the group in the survivors and
     the function recomputes, so the output covers every group in the data."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark import memo
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)  # force threshold path
     key = ("test-stale-psk",)
-    _PSK_SIZES_CACHE.pop((key, "source", "psk_sizes"), None)
+    skey = (*key, "source", "psk_sizes")
+    memo.clear(skey)
     df1 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(200)],
         "doc_id bigint, source string",
     )
     out1 = per_source_uniform_k(df1, k=3, cache_key=key).collect()
     assert {r.source for r in out1} == {"a", "b"}
-    assert (key, "source", "psk_sizes") in _PSK_SIZES_CACHE
+    assert set(memo.get(spark, skey, lambda: pytest.fail("sizes not stored"))) == {"a", "b"}
     # same cache_key, new group "c" (and more rows in a/b): the stale map
     # has no threshold for "c"
     df2 = spark.createDataFrame(
@@ -1950,10 +1950,10 @@ def test_per_source_k_stale_size_cache_detected(spark, monkeypatch):
     assert set(by_g) == {"a", "b", "c"}
     for g in ("a", "b", "c"):
         assert sorted(by_g[g]) == [1, 2, 3]
-    # the cache entry was refreshed to the new data's sizes
-    refreshed = _PSK_SIZES_CACHE[(key, "source", "psk_sizes")]
+    # the store entry was refreshed to the new data's sizes
+    refreshed = memo.get(spark, skey, lambda: pytest.fail("sizes not stored"))
     assert set(refreshed) == {"a", "b", "c"}
-    _PSK_SIZES_CACHE.pop((key, "source", "psk_sizes"), None)
+    memo.clear(skey)
 
 
 def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
@@ -1963,14 +1963,12 @@ def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
     than reality is impossible — instead sizes match but we shrink k's
     threshold by inflating cached n), then require the exact bottom-k."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark import memo
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)
     key = ("test-escalate-psk",)
-    skey = (key, "source", "psk_sizes")
+    skey = (*key, "source", "psk_sizes")
     df = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(400)],
         "doc_id bigint, source string",
@@ -1983,10 +1981,11 @@ def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
     # threshold becomes ~16·k/200000 — too tight, escalates to 4096, which
     # at 4096·4/200000 of 2^60 still keeps enough with high probability;
     # if not, the final window fallback still returns the exact answer
-    _PSK_SIZES_CACHE[skey] = {"a": 200_000, "b": 200_000}
+    memo.clear(skey)
+    memo.get(spark, skey, lambda: {"a": 200_000, "b": 200_000})
     got = sorted(map(tuple, per_source_uniform_k(df, k=4, cache_key=key).collect()))
     assert got == want
-    _PSK_SIZES_CACHE.pop(skey, None)
+    memo.clear(skey)
 
 
 def test_per_source_k_grown_group_stale_cache_detected(spark, monkeypatch):
@@ -1995,53 +1994,54 @@ def test_per_source_k_grown_group_stale_cache_detected(spark, monkeypatch):
     The survivor-overflow detector (survivors > cached group size, which is
     impossible under a fresh map) marks the cache stale and recomputes."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark import memo
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)  # force threshold path
     key = ("test-grown-psk",)
-    skey = (key, "source", "psk_sizes")
-    _PSK_SIZES_CACHE.pop(skey, None)
+    skey = (*key, "source", "psk_sizes")
+    memo.clear(skey)
     df1 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(40)],
         "doc_id bigint, source string",
     )
     out1 = per_source_uniform_k(df1, k=3, cache_key=key).collect()
     assert {r.source for r in out1} == {"a", "b"}
-    assert _PSK_SIZES_CACHE[skey] == {"a": 20, "b": 20}
+    assert memo.get(spark, skey, lambda: pytest.fail("sizes not stored")) == {"a": 20, "b": 20}
     # same cache_key, SAME groups, 10x the rows: cached sizes now lie small
     df2 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(400)],
         "doc_id bigint, source string",
     )
     got = sorted(map(tuple, per_source_uniform_k(df2, k=3, cache_key=key).collect()))
+    # the store entry was refreshed to the grown sizes
+    assert memo.get(spark, skey, lambda: pytest.fail("sizes not stored")) == {"a": 200, "b": 200}
+    memo.clear(skey)
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 10**9)
-    _PSK_SIZES_CACHE.pop(skey, None)
     want = sorted(map(tuple, per_source_uniform_k(df2, k=3).collect()))
     assert got == want
-    # and the cache entry was refreshed to the grown sizes
-    assert _PSK_SIZES_CACHE.get(skey, {}).get("a") in (None, 200)
-    _PSK_SIZES_CACHE.pop(skey, None)
 
 
 def test_dedup_session_caches_reset_on_new_session(spark, sf_dir):
-    """ADVICE r14 (low): the id(spark)-keyed dedup caches (_SIG_CACHE,
-    _EDITDIST_PFX_CACHE) must reset when a NEW session id appears — the
-    same single-session pattern as __spark_entry__._PLAN_CACHE — so a dead
-    session's localCheckpointed prefix DataFrame can never be resurrected
-    by CPython id() reuse."""
+    """ADVICE r14 (low): the dedup artifacts (signatures, localCheckpointed
+    editdist prefix table) must not survive a session change — the store
+    compares sessions by identity, so a dead session's DataFrame can never
+    be resurrected by CPython id() reuse."""
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.operators import dedup
 
-    dedup._reset_session_caches(spark)
-    dedup._collect_signatures(spark, sf_dir)
-    assert any(k[0] == id(spark) for k in dedup._SIG_CACHE)
-    dedup._EDITDIST_PFX_CACHE[(id(spark), sf_dir, 32)] = object()
+    sig_key = (sf_dir, "documents", "minhash_sigs")
+    pfx_key = (sf_dir, "documents", "editdist_prefix", dedup.EDITDIST_PREFIX)
+    sigs = dedup._collect_signatures(spark, sf_dir)
+    dedup.editdist_verify_lsh(spark, sf_dir)
+    assert memo.get(spark, sig_key, lambda: pytest.fail("sigs not stored")) is sigs
+    memo.get(spark, pfx_key, lambda: pytest.fail("prefix table not stored"))
 
-    class _Fake:  # a different "session" object → different id
+    class _Fake:  # a different "session" object
         pass
 
-    dedup._reset_session_caches(_Fake())
-    assert dedup._SIG_CACHE == {} and dedup._EDITDIST_PFX_CACHE == {}
-    dedup._reset_session_caches(spark)  # restore for later tests
+    memo.get(_Fake(), (None, "probe"), object)
+    # every entry of the real session is gone
+    assert memo.get(spark, sig_key, lambda: None) is None
+    assert memo.get(spark, pfx_key, lambda: None) is None
+    memo.clear()  # drop the placeholders for later tests
